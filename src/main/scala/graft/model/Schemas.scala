@@ -140,18 +140,6 @@ object Tables {
     }
   }
 
-  /** Memoized scan partition counts per (session, dir, table) so
-    * [[loadSpread]]'s decision costs one physical-planning pass per
-    * table per session, not one per query construction. */
-  private val scanParts =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), Int]()
-  // r17 (advice fix): the memo follows the same lifetime as every other
-  // library cache — clearCaches is the documented reset when a
-  // long-lived session moves between corpora, and a regenerated dataset
-  // at the same dir must not keep a stale split count (wrong
-  // spread-or-not decision; performance only, never results).
-  Caches.register(() => scanParts.clear())
-
   /** [[load]] plus a scale-adaptive input spread (optimization guide
     * §2.5 "input skew: one huge unsplittable file … repartition
     * immediately after the read", §6 input splits).
@@ -178,16 +166,17 @@ object Tables {
     * [[load]]: for them an extra full pass over the corpus at 100 TB
     * costs more than serial scanning at bench scale ever could. */
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // measurement-only escape hatch for spread-site A/B runs
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD"))
-      return load(spark, dir, name)
     val df = load(spark, dir, name)
     if (scanPartitions(spark, dir, name) >= spark.sparkContext.defaultParallelism) df
     else df.repartition(spark.sparkContext.defaultParallelism)
   }
 
-  /** Partition count of the raw scan for (dir, name) — the memoized
-    * planning pass behind [[loadSpread]]'s decision, exposed so
+  /** Partition count of the raw scan for (dir, name) — the planning
+    * pass behind [[loadSpread]]'s decision, memoized per session so it
+    * runs once per table, not once per query construction. [[Memo]]'s
+    * clearing drops it with every other library cache, so a dataset
+    * regenerated at the same dir never keeps a stale split count
+    * (performance only, never results). Exposed so
     * substrate builders can COMPACT a spread derivation's persisted
     * artifact back to the input's own partitioning (r17, guide §5:
     * spread the build, cache at scan width). A cores-wide persisted
@@ -195,9 +184,8 @@ object Tables {
     * pure per-task overhead once the frame is small — while at
     * cluster scale the spread is a no-op and so is the compaction. */
   def scanPartitions(spark: SparkSession, dir: String, name: String): Int =
-    scanParts.computeIfAbsent(
-      (System.identityHashCode(spark), dir, name),
-      _ => load(spark, dir, name).rdd.getNumPartitions)
+    Memo(spark, "tables", "scanParts", dir, name)(
+      load(spark, dir, name).rdd.getNumPartitions)
 
   /** Repartition `df` (a frame derived from a spread `name` scan) back
     * to the scan's own partition count for caching — planned ONLY when
@@ -225,24 +213,53 @@ object Tables {
     else df.repartition(spark.sparkContext.defaultParallelism)
 
   /** Release every cached frame this library pinned (shingle index,
-    * normalized vectors, shared pair frames) plus any memoized derived
-    * results registered via [[Caches.register]]. The per-query helpers
-    * persist small derived frames and rely on the CacheManager deduping
-    * identical plans across queries — cheap within one run, but a
-    * long-lived session moving between corpora should call this between
-    * datasets. */
+    * normalized vectors, shared pair frames) plus every [[Memo]]
+    * entry. The per-query helpers persist small derived frames and rely
+    * on the CacheManager deduping identical plans across queries —
+    * cheap within one run, but a long-lived session moving between
+    * corpora should call this between datasets. */
   def clearCaches(spark: SparkSession): Unit = Caches.clearAll(spark)
 }
 
-/** Registry of library-held caches that are NOT plan-cached (e.g. the
-  * memoized connected-components result, which is an eagerly
-  * checkpointed frame, invisible to the CacheManager). Query families
-  * register a clear hook at init; [[clearAll]] drops everything. */
+/** Library-held caches: the session's plan cache plus [[Memo]], which
+  * holds what the CacheManager cannot see (eagerly checkpointed CC
+  * labels, collected index literals, scan split counts). [[clearAll]]
+  * drops both. */
 object Caches {
-  private val hooks = new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  def register(hook: () => Unit): Unit = hooks.add(hook)
   def clearAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    hooks.forEach(h => h())
+    Memo.clear()
   }
+}
+
+/** The library's one memo for derived frames, indexes and planning
+  * results, keyed by the owning session OBJECT (not its identity hash,
+  * which two live sessions can share), a namespace, and the caller's
+  * key parts. Frames used as key parts compare by reference — Dataset
+  * has no value equality.
+  *
+  * get/putIfAbsent, never computeIfAbsent: builders nest (pair memos
+  * build on the prefix-index memo, which builds on the shingle memo),
+  * and a computeIfAbsent whose mapping function inserts into the same
+  * map throws "Recursive update" whenever the inner key lands in the
+  * bin the outer call holds — hash-layout-dependent, so it fired at
+  * random. A rare concurrent same-key double build is benign: the
+  * CacheManager dedupes identical persisted plans and the loser adopts
+  * the winner's value. Cleared by [[Caches.clearAll]]. */
+object Memo {
+  private final case class Key(session: SparkSession, namespace: String, parts: Seq[Any])
+  private val entries = new java.util.concurrent.ConcurrentHashMap[Key, Any]()
+
+  def apply[V](session: SparkSession, namespace: String, parts: Any*)(build: => V): V = {
+    val k = Key(session, namespace, parts)
+    val got = entries.get(k)
+    if (got != null) got.asInstanceOf[V]
+    else {
+      val built = build
+      val prev = entries.putIfAbsent(k, built)
+      (if (prev != null) prev else built).asInstanceOf[V]
+    }
+  }
+
+  private[model] def clear(): Unit = entries.clear()
 }

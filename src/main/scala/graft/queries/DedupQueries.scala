@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.model.Tables
+import graft.model.{Memo, Tables}
 
 /** Deduplication operators over the `documents` table — the core of a
   * training-data pipeline. Four families:
@@ -58,7 +58,7 @@ object DedupQueries {
     * fingerprint pass + self-join that dedup_winnow and the audit each
     * re-paid per run (part of the audit's 36.6 s sf10 line). */
   private def winnowSharedCounts(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "winnow_shared")( {
+    Memo(s, "dedup", dir, "winnow_shared")( {
       val sel = TextQueries.winnowSelected(docsSpread(s, dir),
           TextQueries.WinnowK, TextQueries.WinnowW)
         .select(col("doc_id"), col("fp")).distinct()
@@ -69,43 +69,17 @@ object DedupQueries {
         .persist()
     })
 
-  /** Memoized shared frames per (session, dataset, tag) — the CC
-    * labels, PageRank, and the τ-sweep's pinned verified pairs. The CC
-    * results are eagerly checkpointed frames produced by iterative
-    * jobs — they cannot be shared through the CacheManager like the
-    * plan-cached frames, so dedup_survivors and the cleaning pipeline
-    * would otherwise each pay the full iteration; the persisted
-    * entries ride along so ONE frame object owns each pin by
-    * construction. Cleared via [[graft.model.Caches]]. */
-  private val ccMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), DataFrame]()
-  graft.model.Caches.register(() => ccMemo.clear())
-
-  /** get/putIfAbsent rather than computeIfAbsent (r17 — the same fix
-    * annMemo/mediaMemo carry): memo builders here legitimately NEST
-    * (pair memos build on the prefix-index memo builds on the shingle
-    * memo; the τ-sweep builds on the prefix index), and a nested
-    * computeIfAbsent on one ConcurrentHashMap throws "Recursive
-    * update" whenever the inner insert lands in the bin the outer call
-    * is updating — hash-layout-dependent, so it fired
-    * NONDETERMINISTICALLY (caught at sf0.001 in r17; latent since the
-    * round-15 τ-sweep memo). A rare concurrent same-key double-build
-    * is benign: the CacheManager dedupes identical persisted plans and
-    * the loser adopts the winner's frame. */
-  private def ccMemoized(s: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(s), dir, tag)
-    val got = ccMemo.get(k)
-    if (got != null) got
-    else {
-      val built = build
-      val prev = ccMemo.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
-  }
-
+  /** Memoized CC labels over the verified n-gram pairs. Every shared
+    * frame of this family (CC labels, PageRank, the τ-sweep's pinned
+    * pairs, the substrate frames) lives in [[Memo]] under "dedup",
+    * keyed by (session, dataset, tag). The CC results are eagerly
+    * checkpointed frames produced by iterative jobs — they cannot be
+    * shared through the CacheManager like the plan-cached frames, so
+    * dedup_survivors and the cleaning pipeline would otherwise each
+    * pay the full iteration; the persisted entries ride along so ONE
+    * frame object owns each pin by construction. */
   private[queries] def componentLabels(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "ngram")(
+    Memo(s, "dedup", dir, "ngram")(
       graft.ops.Graph.connectedComponents(
         ngramJaccardPairs(s, dir).select("doc_a", "doc_b")))
 
@@ -114,12 +88,12 @@ object DedupQueries {
     * invisible to the CacheManager, so without the memo every run
     * repays all 8 iterations. */
   private[queries] def graphRankLabels(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "pagerank")(
+    Memo(s, "dedup", dir, "pagerank")(
       graft.ops.Graph.pageRankScaled(
         ngramJaccardPairs(s, dir).select("doc_a", "doc_b")))
 
   private[queries] def componentLabelsLsh(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "lsh")(
+    Memo(s, "dedup", dir, "lsh")(
       graft.ops.Graph.connectedComponents(
         lshVerifiedPairs(s, dir).select("doc_a", "doc_b")))
 
@@ -192,7 +166,7 @@ object DedupQueries {
     * census alone). The frame is n × 2 longs — the same footprint
     * class as [[corpusSignatures]]. */
   private[queries] def simhashSigs(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "simhash_sigs")(
+    Memo(s, "dedup", dir, "simhash_sigs")(
       // spread the hash pass, CACHE at the scan's own width (r17,
       // guide §5 / Tables.compactForCache): the cores-wide persisted
       // sigs made every consumer stage cores-wide over an n×3-long
@@ -206,7 +180,7 @@ object DedupQueries {
           simhash62(col("text")).as("sh62"))).persist())
 
   private[queries] def componentLabelsSimhash(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "simhash")(
+    Memo(s, "dedup", dir, "simhash")(
       graft.ops.Graph.connectedComponents(
         simhashPairs(
           // same rows as sampling docs first: the signature memo has
@@ -217,7 +191,7 @@ object DedupQueries {
           .select("doc_a", "doc_b")))
 
   private[queries] def componentLabelsSimhashWide(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "simhash_wide")(
+    Memo(s, "dedup", dir, "simhash_wide")(
       graft.ops.Graph.connectedComponents(
         queries("dedup_simhash_wide")(s, dir).select("doc_a", "doc_b")))
 
@@ -227,20 +201,20 @@ object DedupQueries {
     * the candidate audit, and the SNM survivor CC each re-paid per
     * run. One frame object per (session, dataset) ends that. */
   private def snmCandidatesMemo(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "snm_cands")(
+    Memo(s, "dedup", dir, "snm_cands")(
       snmCandidates(docsSpread(s, dir)).persist())
 
   private def snmGlobalCandidatesMemo(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "snm_global_cands")(
+    Memo(s, "dedup", dir, "snm_global_cands")(
       snmGlobalCandidates(docsSpread(s, dir)).persist())
 
   private[queries] def componentLabelsSnm(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "snm")(
+    Memo(s, "dedup", dir, "snm")(
       graft.ops.Graph.connectedComponents(
         queries("dedup_sorted_neighborhood")(s, dir).select("doc_a", "doc_b")))
 
   private[queries] def componentLabelsSemantic(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "semantic")(
+    Memo(s, "dedup", dir, "semantic")(
       graft.ops.Graph.connectedComponents(
         queries("dedup_semantic")(s, dir)
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))))
@@ -254,7 +228,7 @@ object DedupQueries {
     // repeated calls, but every call still re-analyzed and
     // re-canonicalized the full lineage — pure construction overhead
     // for the ~20 consumers that each call this several times per run
-    ccMemoized(s, dir, "shingled")(
+    Memo(s, "dedup", dir, "shingled")(
       // spread the tokenize+shingle pass, cache at scan width (r17,
       // Tables.compactForCache — see simhashSigs for the measured
       // anti-scaling a cores-wide cache caused)
@@ -368,7 +342,7 @@ object DedupQueries {
     * sf10 — the census' Σ posting-list sizes), graph-index-sized,
     * never corpus-text-sized. */
   private[queries] def corpusPrefixIndex(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "ppjoin_prefix07")(
+    Memo(s, "dedup", dir, "ppjoin_prefix07")(
       ppjoinPrefix(shingled(s, dir), 7, 10).persist())
 
   /** Memo-persisted τ = 0.8 anchor-capped PPJoin candidate pairs —
@@ -378,7 +352,7 @@ object DedupQueries {
     * even though the verified pair set it feeds was already memoized).
     * Pair-graph-sized (hundreds of rows at oracle scales). */
   private def ppjoinCandidatePairs08(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "ppjoin_cands08")(
+    Memo(s, "dedup", dir, "ppjoin_cands08")(
       ppjoinCandidates(shingled(s, dir), tauNum = 4, tauDen = 5,
         anchorCap = Some(LshBucketCap),
         prefixOpt = Some(prefixAtTau(corpusPrefixIndex(s, dir), 4, 5)))
@@ -391,7 +365,7 @@ object DedupQueries {
     * previously re-ran the rank + join + distinct per run.
     * Pair-graph-sized. */
   private def lshCandidatePairs(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "lsh_cands")(
+    Memo(s, "dedup", dir, "lsh_cands")(
       lshCandidatesFromBands(corpusBands(s, dir)).persist())
 
   /** The τ = tauNum/tauDen prefix as a filter of the memoized τ = 0.7
@@ -457,7 +431,7 @@ object DedupQueries {
     * cost of eager materialization on first construction — the same
     * trade the CC-label memos already make. A few hundred tiny rows. */
   private[queries] def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "ngram_pairs") {
+    Memo(s, "dedup", dir, "ngram_pairs") {
       val sh = shingled(s, dir)
       jaccardFromCounts(
         // τ = 0.8, anchor-capped BY DEFAULT (round 12): exact wherever a
@@ -657,7 +631,7 @@ object DedupQueries {
     * |corpus| × 65 longs — negligible next to the shingle index it
     * derives from. Cleared with the rest via Tables.clearCaches. */
   private def corpusSignatures(s: SparkSession, dir: String): DataFrame =
-    ccMemoized(s, dir, "corpus_sigs")(
+    Memo(s, "dedup", dir, "corpus_sigs")(
       // re-spread the compacted shingle cache for the CPU-dense
       // 64-perm pass, then compact the n×65-long result back to scan
       // width for its own cache (Tables.spreadForCompute /
@@ -1026,11 +1000,11 @@ object DedupQueries {
       // 28% of the full-suite total). The frame is τ≥0.7 verified
       // pairs — tiny (hundreds of rows at oracle scale, ~graph-sized
       // always), so the pin cannot evict corpus-scale caches (the
-      // round-5 hazard). Registered in ccMemo (round-14 advice) so
+      // round-5 hazard). Registered in Memo (round-14 advice) so
       // repeat invocations share ONE pinned frame by construction
       // instead of relying on CacheManager plan canonicalization, and
       // Caches.clearAll visibly owns its lifetime.
-      val verified = ccMemoized(s, dir, "tau_sweep_verified")(
+      val verified = Memo(s, "dedup", dir, "tau_sweep_verified")(
           jaccardFromCounts(
             ppjoinCandidates(sh, tauNum = 7, tauDen = 10, // τ = 0.7 superset
               anchorCap = Some(LshBucketCap),
@@ -1225,7 +1199,7 @@ object DedupQueries {
       // probe run was paying exactly the cost the query documents
       // away. Index-sized (≤ 16 band rows per corpus doc). The batch
       // side stays per-run: it IS the arriving work.
-      val corpusIx = ccMemoized(s, dir, "incremental_corpus_ix")(
+      val corpusIx = Memo(s, "dedup", dir, "incremental_corpus_ix")(
           capped(bands.filter(!isNew)
             .select(col("band"), col("bucket"), col("doc_id").as("matched_id")))
             .persist())
@@ -1275,8 +1249,8 @@ object DedupQueries {
       val sh = shingled(s, dir)
       // MEETING-COUNT candidate generation over the shared memoized
       // τ = 0.7 prefix index (r17 — replaces the per-run full ranked
-      // index + PPJoin+ positional bound; chosen by the sf10 stage
-      // probe, ContainmentProbe):
+      // index + PPJoin+ positional bound; chosen by an sf10 stage
+      // probe recorded in OPTIMIZATION_r17.md):
       //
       //  - A's side is the memoized τ = 0.7 prefix P07(A) (the LONGER
       //    prefix, |P07| = na − ⌈0.7·na⌉ + 1 ≥ the τ = 0.9 prefix);
@@ -1292,7 +1266,8 @@ object DedupQueries {
       //  - A size filter rides along: B can only contain A's
       //    τ-fraction if nb ≥ ⌈τ·na⌉.
       //
-      // Measured at sf10 (ContainmentProbe, 32 parts, warm best-of-2):
+      // Measured at sf10 (stage probe, 32 parts, warm best-of-2;
+      // OPTIMIZATION_r17.md):
       // the old positional bound pruned the 8.4 M raw candidate rows
       // only to 7.3 M distinct pairs, whose array-verify join was the
       // query's 24 s tail; the meeting-count bound prunes the same
@@ -1373,7 +1348,7 @@ object DedupQueries {
       // ([[componentLabelsSimhashWide]] → dedup_survivors_wide) sit
       // on; near-dup-pair-sized by the wide signature's sharpness.
       // The doc-pair expansion + ham=0 groups still run per scan.
-      val sp = ccMemoized(s, dir, "simhash62_sigpairs")(
+      val sp = Memo(s, "dedup", dir, "simhash62_sigpairs")(
         simhashBlockCandidates(d.select("sh").distinct(),
           SimhashAnchorCap, Simhash62Blocks)
           .withColumn("ham", hamming(col("sha"), col("shb")))
@@ -1781,7 +1756,7 @@ object DedupQueries {
       // short (~6 chars), so 16 codegen'd hashes of one token are
       // cheap. An earlier loaded-window A/B had shown the opposite at
       // 3 reps — window drift, not signal. Outputs were identical
-      // either way (graft.queries.SubstrAb keeps the harness).)
+      // either way; the A/B is recorded in OPTIMIZATION_r17.md.)
       val gram = slice(col("toks"), col("o"), lit(L))
       val occ = d
         .select(col("doc_id"), col("toks"),
@@ -1820,7 +1795,7 @@ object DedupQueries {
       // derivation; this query's unit of work is the two 1-row
       // aggregates over spans it was already sharing semantically.
       // Span rows = O(duplicated spans) — output-sized, safe to pin.
-      val spans = ccMemoized(s, dir, "exact_substring_spans")(
+      val spans = Memo(s, "dedup", dir, "exact_substring_spans")(
         queries("dedup_exact_substring")(s, dir).persist())
       val tot = docsSpread(s, dir)
         .select(size(tokens(col("text"))).cast("long").as("n"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{Memo, Tables}
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.{MediaRecord, MediaPipeline}
 
@@ -18,36 +18,17 @@ import graft.multimodal.Multimodal.{MediaRecord, MediaPipeline}
   * scan + binary cast is paid once per session/dataset, not once per
   * query (round 4 benched it 5×). The frame-sample output and the
   * distinct frame index are likewise memoized — `frame_sample` and
-  * `video_neardup` share one codec pass. All memos are registered with
-  * [[graft.model.Caches]] and dropped by `Tables.clearCaches`.
+  * `video_neardup` share one codec pass. All memos live in
+  * [[graft.model.Memo]] under "multimodal" and are dropped by
+  * `Tables.clearCaches`.
   */
 object MultimodalQueries {
-
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), DataFrame]()
-  graft.model.Caches.register(() => memo.clear())
-
-  // get/putIfAbsent rather than computeIfAbsent: memo entries build on
-  // one another (frameIndex → frames → media) and a nested
-  // computeIfAbsent on one ConcurrentHashMap throws "Recursive update".
-  // A lost race merely builds a lazy (never-materialized) duplicate
-  // plan — putIfAbsent keeps exactly one canonical frame.
-  private def memoized(s: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(s), dir, key)
-    val existing = memo.get(k)
-    if (existing != null) existing
-    else {
-      val built = build
-      val prev = memo.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
-  }
 
   /** The family-shared media-record pass: documents parquet → opaque
     * binary payload + typed metadata, persisted once per
     * session/dataset. */
   private def media(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "media")(
+    Memo(s, "multimodal", dir, "media")(
       // plain load (measured r16): every downstream fingerprint pass is
       // mapPartitions with one codec init per partition — a 32-way
       // spread multiplies the init cost and fragments the shared cache
@@ -64,7 +45,7 @@ object MultimodalQueries {
     * oracle-checked per frame. Memoized per parameterization so
     * video near-dup shares the codec pass. */
   def frameSampleQuery(s: SparkSession, dir: String, frameLen: Int, stride: Int): DataFrame =
-    memoized(s, dir, s"frames:$frameLen:$stride")(
+    Memo(s, "multimodal", dir, s"frames:$frameLen:$stride")(
       MediaPipeline.frameSample(mediaDs(s, dir), frameLen, stride).toDF().persist())
 
   /** Distinct (media_id, frame_fp) inverted-index base for video
@@ -72,7 +53,7 @@ object MultimodalQueries {
     * pair's shared count. Persisted: both sides of the per-fingerprint
     * self-join scan it (PlanSpec pins the InMemoryTableScan). */
   private def frameIndex(s: SparkSession, dir: String, frameLen: Int, stride: Int): DataFrame =
-    memoized(s, dir, s"frameIndex:$frameLen:$stride")(
+    Memo(s, "multimodal", dir, s"frameIndex:$frameLen:$stride")(
       frameSampleQuery(s, dir, frameLen, stride)
         .select(col("media_id"), col("frame_fp")).distinct().persist())
 
@@ -102,7 +83,7 @@ object MultimodalQueries {
 
   private def mediaNearDup(s: SparkSession, dir: String) = {
     import s.implicits._
-    memoized(s, dir, "mediaNearDup") {
+    Memo(s, "multimodal", dir, "mediaNearDup") {
       val base = mediaDs(s, dir)
       val variants = base
         .filter(r => r.media_id % ReencodeEvery == 0 && r.data.nonEmpty)
@@ -196,7 +177,7 @@ object MultimodalQueries {
       // pair expansion ×2, same-sig ×2) — memo-persisted so the codec
       // pass over the payloads runs once, not per branch (same reason
       // the PQ code index persists in adcShortlist)
-      val d = memoized(s, dir, "ahash:56")(
+      val d = Memo(s, "multimodal", dir, "ahash:56")(
         MediaPipeline.ahash(mediaNearDup(s, dir), samples = 56).toDF().persist())
       val sigs = d.select("ahash").distinct()
       val blocks = array((0 until 4).map { i =>
@@ -261,7 +242,7 @@ object MultimodalQueries {
     "multimodal_phash_dedup" -> ((s, dir) => {
       def blockBits(c: org.apache.spark.sql.Column, i: Int) =
         shiftrightunsigned(c, i * 21).bitwiseAND(lit((1L << 21) - 1))
-      val d = memoized(s, dir, "phash")(
+      val d = Memo(s, "multimodal", dir, "phash")(
         MediaPipeline.phash(mediaNearDup(s, dir)).toDF().persist())
       val sigs = d.select("phash").distinct()
       val blocks = array((0 until 3).map { i =>
@@ -316,7 +297,7 @@ object MultimodalQueries {
     // via the shared memoized pointer-jumping CC; shuffles are sized
     // by the PAIR GRAPH, never the media corpus
     "multimodal_phash_survivors" -> ((s, dir) =>
-      memoized(s, dir, "phash_cc")(
+      Memo(s, "multimodal", dir, "phash_cc")(
         graft.ops.Graph.connectedComponents(
           queries("multimodal_phash_dedup")(s, dir)
             .select(col("media_a").as("doc_a"), col("media_b").as("doc_b")))

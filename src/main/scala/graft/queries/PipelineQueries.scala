@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.model.Tables
+import graft.model.{Memo, Tables}
 
 /** The end-to-end corpus-cleaning pipeline — the job a training-data
   * engine exists to run — composed from the individual operators and
@@ -108,10 +108,6 @@ object PipelineQueries {
   /** DSIR hashed-feature space: B buckets of polyHash31(unigram|bigram). */
   private[graft] val dsirB = 1024L
 
-  private val dsirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  graft.model.Caches.register(() => dsirMemo.clear())
-
   /** Memoized per-(doc, source, bucket) feature counts, persisted: the
     * feature pass (explode + per-char poly31 fold over every unigram
     * and bigram) is the expensive part of DSIR and the batch query
@@ -121,7 +117,7 @@ object PipelineQueries {
     * `Tables.clearCaches` — the unpersisted plan is identical, just
     * recomputed per scan. */
   private[queries] def dsirBucketCounts(s: SparkSession, dir: String): DataFrame =
-    dsirMemo.computeIfAbsent((System.identityHashCode(s), dir), _ =>
+    Memo(s, "pipeline", dir, "dsir_buckets")(
       // loadSpread (r16): the feature pass below (tokenize + bigram
       // zip + per-char poly31 fold over every feature) is the
       // CPU-dense scan-root profile — measured 1.08 s single-task on

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{Memo, Tables}
 
 /** Relational coverage beyond the reference's surface (which has no
   * joins, distinct, rollup, sort/limit, or set operations —
@@ -40,14 +40,10 @@ object RelationalQueries {
     * cost the family amortizes (the 320-partition A/B proved the
     * per-query cost was the repeated WORK, not spill). The frame is
     * |part|×|supplier|-bounded — catalog², never event volume — so
-    * persisting it is cheap at any scale. Registered with
-    * [[graft.model.Caches]]; Tables.clearCaches drops it with the
-    * rest. */
-  private val psMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  graft.model.Caches.register(() => psMemo.clear())
+    * persisting it is cheap at any scale. Memoized in
+    * [[graft.model.Memo]]; Tables.clearCaches drops it with the rest. */
   private def derivedPartsupp(s: SparkSession, dir: String): DataFrame =
-    psMemo.computeIfAbsent((System.identityHashCode(s), dir), _ =>
+    Memo(s, "relational", dir, "partsupp")(
       t(s, dir, "lineitem")
         .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
         .agg(min(col("l_extendedprice") / col("l_quantity")).as("ps_supplycost"),

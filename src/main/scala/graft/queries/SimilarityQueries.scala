@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.KernelExpressions.dot
-import graft.model.Tables
+import graft.model.{Memo, Tables}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`,
   * dim 64).
@@ -39,34 +39,15 @@ object SimilarityQueries {
   private[graft] def cosine(va: Column, vb: Column, na: Column, nb: Column): Column =
     dot(va, vb) / (na * nb)
 
-  /** Memoized top-k result frames, keyed by (session, corpus dir,
-    * method). A vector store materializes each index's search output
-    * once and every downstream consumer — the per-method query AND the
-    * recall audit that joins all of them against brute force — reads
-    * that artifact; re-running six full ANN pipelines inside
-    * [[rawQueries sim_recall_eval]] was the suite's single most
-    * expensive bench line. The frames are top-5-per-query (tens of
-    * rows), so the pinned footprint is negligible. Cleared via
-    * [[graft.model.Caches]]. */
-  private val annMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), DataFrame]()
-  graft.model.Caches.register(() => annMemo.clear())
-
-  /** get/putIfAbsent rather than computeIfAbsent: sim_recall_eval
-    * builds nested entries (brute force inside the eval) on this same
-    * map, and a nested computeIfAbsent on one ConcurrentHashMap throws
-    * "Recursive update". */
-  private def memoShortlist(s: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(s), dir, key)
-    val got = annMemo.get(k)
-    if (got != null) got
-    else {
-      val built = build.persist()
-      val prev = annMemo.putIfAbsent(k, built)
-      if (prev != null) { built.unpersist(); prev } else built
-    }
-  }
+  // Memoized top-k result frames live in Memo under "similarity",
+  // keyed by (session, corpus dir, method), each persisted at build. A
+  // vector store materializes each index's search output once and
+  // every downstream consumer — the per-method query AND the recall
+  // audit that joins all of them against brute force — reads that
+  // artifact; re-running six full ANN pipelines inside
+  // sim_recall_eval was the suite's single most expensive bench line.
+  // The frames are top-5-per-query (tens of rows), so the pinned
+  // footprint is negligible.
 
   /** Deterministic hyperplanes: `planes(p)(d)` in [-1, 1), LCG seed 7.
     * Derived once on the driver and baked into the plan as literals. */
@@ -244,7 +225,7 @@ object SimilarityQueries {
   }
 
   private[graft] def semAssigned(s: SparkSession, dir: String): DataFrame =
-    memoShortlist(s, dir, "sem_assign") {
+    Memo(s, "similarity", dir, "sem_assign") {
       val vs = vectors(s, dir)
       val (_, _, coarse, cellOfCent) = semCentFrames(s, dir)
       // coarse cell of each vector: n×k₁ expansion, map-side combined
@@ -276,6 +257,7 @@ object SimilarityQueries {
           max(struct(col("score"), (-col("cent_id")).as("negc"))).as("m"))
         .select(col("vec_id"), col("v"), col("nrm"),
           (-col("m.negc")).as("bucket"))
+        .persist()
     }
 
   /** Product-quantization pieces: per-subspace squared-L2 distance
@@ -434,11 +416,11 @@ object SimilarityQueries {
       // repartition, NOT coalesce: coalesce(1) would pull the rank
       // window into one task and serialize the corpus-sized shortlist
       // ranking at scale; the exchange moves ≤ 100 rows once.
-      val short = memoShortlist(s, dir, "mmr_short")(
+      val short = Memo(s, "similarity", dir, "mmr_short")(
         topK(vs.filter(col("vec_id") < 10), vs, k = 10)
           .select(col("query_id"), col("neighbor_id"), col("cos").as("rel"))
-          .repartition(1))
-      val pair = memoShortlist(s, dir, "mmr_pair") {
+          .repartition(1).persist())
+      val pair = Memo(s, "similarity", dir, "mmr_pair") {
         val cv = short
           .join(vs.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
             "neighbor_id")
@@ -449,7 +431,7 @@ object SimilarityQueries {
           .filter(col("a") =!= col("b"))
           .select(col("query_id"), col("a"), col("b"),
             round(cosine(col("va"), col("vb"), col("na"), col("nb")), 6).as("cs"))
-          .repartition(1)
+          .repartition(1).persist()
       }
       // materialize the substrate at session parallelism BEFORE the
       // unroll (the corpus-sized shortlist scan must not run
@@ -800,14 +782,14 @@ object SimilarityQueries {
     // grouping consumers read cluster exemplars from. Edge volume
     // ≤ 4n before symmetrization; CC shuffles are graph-sized.
     "sim_knn_clusters" -> ((s, dir) =>
-      // memoShortlist (r16): the cluster labels are an index artifact
+      // memoized (r16): the cluster labels are an index artifact
       // like every other ANN memo here — the graph was already
       // persisted but the mutual join + CC fixpoint (~40 driver-bound
       // jobs; warm 1.6 s, nearly all job-launch overhead on a tiny
       // contracted edge set) re-ran on every scan. Same session-memo
       // discipline as DedupQueries.componentLabels*, which memoize the
       // CC labels their survivor queries read.
-      memoShortlist(s, dir, "knn_cc") {
+      Memo(s, "similarity", dir, "knn_cc") {
         val g = queries("sim_knn_graph")(s, dir)
           .select(col("vec_id"), col("neighbor_id"))
         val mutual = g.as("a").join(g.as("b"),
@@ -817,6 +799,7 @@ object SimilarityQueries {
           .select(col("a.vec_id").as("doc_a"), col("a.neighbor_id").as("doc_b"))
         graft.ops.Graph.connectedComponents(mutual)
           .select(col("node").as("vec_id"), col("rep"))
+          .persist()
       }),
 
     // product-quantization ANN (Jégou et al., "Product Quantization for
@@ -1087,7 +1070,7 @@ object SimilarityQueries {
               // rank window itself into one task, serializing the
               // corpus-sized candidate ranking at scale.
               ((s: SparkSession, dir: String) =>
-                memoShortlist(s, dir, n)(f(s, dir).repartition(1)))
+                Memo(s, "similarity", dir, n)(f(s, dir).repartition(1).persist()))
             else f)
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.model.Tables
+import graft.model.{Memo, Tables}
 
 /** Text-analysis queries over `documents`: token counting (whitespace +
   * BPE-ish regex), quality stats, language ID, and fingerprinting —
@@ -212,13 +212,6 @@ object TextQueries {
           col("rule_stops") === 1L).cast("long"))
   }
 
-  /** Memoized contamination results, keyed by (session, corpus dir) —
-    * get/putIfAbsent, same nesting-safe discipline as the other memo
-    * maps. Cleared via [[graft.model.Caches]]. */
-  private val contamMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  graft.model.Caches.register(() => contamMemo.clear())
-
   /** Training docs (source != src0) contaminated by the held-out set:
     * (doc_id, n_shared_spans) for docs sharing ≥ 1 verbatim 8-token
     * span with a src0 document. Shared by the text_contamination query
@@ -226,25 +219,19 @@ object TextQueries {
     * §1.2): both consumers re-ran the corpus span-explode + broadcast
     * probe on every invocation; the result frame is contaminated-docs-
     * sized (tens of rows), never corpus-sized. */
-  private[queries] def contaminatedDocs(s: SparkSession, dir: String): DataFrame = {
-    val k = (System.identityHashCode(s), dir)
-    val got = contamMemo.get(k)
-    if (got != null) got
-    else {
+  private[queries] def contaminatedDocs(s: SparkSession, dir: String): DataFrame =
+    Memo(s, "text", dir, "contaminated") {
       val spans = docsSpread(s, dir)
         .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("source"),
           explode(graft.functions.KernelExpressions.sortedNgramSet(col("toks"), 8)).as("span"))
       val evalSpans = spans.filter(col("source") === "src0").select("span").distinct()
-      val built = spans.filter(col("source") =!= "src0")
+      spans.filter(col("source") =!= "src0")
         .join(broadcast(evalSpans), Seq("span"))
         .groupBy("doc_id") // spans are distinct per doc → count = shared spans
         .agg(count(lit(1)).as("n_shared_spans"))
         .persist()
-      val prev = contamMemo.putIfAbsent(k, built)
-      if (prev != null) prev else built
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Simpson token-diversity quality screen: Σ(c_w/n)² — the
@@ -1096,9 +1083,9 @@ object TextQueries {
     // (r17 rejected experiment: stripping only the FIRST/LAST split
     // elements — the only ones carrying residue — via
     // when/concat/slice instead of the per-token transform measured
-    // marginal 0.355 → 0.400 s/round on BpeBench: the branch + the
-    // three-array concat cost more than the per-token string copies
-    // they avoided. The transform stays.)
+    // marginal 0.355 → 0.400 s/round (OPTIMIZATION_r17.md): the
+    // branch + the three-array concat cost more than the per-token
+    // string copies they avoided. The transform stays.)
     val toksOfEnc = transform(split(col("enc"), d3 + d2),
       x => translate(x, d2 + d3, ""))
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
@@ -1132,11 +1119,12 @@ object TextQueries {
           // (r17 resumed-session rejected experiment: attaching the
           // merge pair via crossJoin(broadcast(1-row frame)) +
           // replace(col, col, col) to "stabilize codegen across
-          // rounds" OOM'd the driver heap on BpeBench's 24-budget —
-          // and the premise was wrong anyway: string literals are
-          // emitted as references[n] in generated code, so the
-          // per-round literal plans already produce identical codegen
-          // source and hit the compile cache. The literal form stays.)
+          // rounds" OOM'd the driver heap at a 24-round budget
+          // (OPTIMIZATION_r17.md) — and the premise was wrong anyway:
+          // string literals are emitted as references[n] in generated
+          // code, so the per-round literal plans already produce
+          // identical codegen source and hit the compile cache. The
+          // literal form stays.)
           val replaced = cur.select(org.apache.spark.sql.functions.replace(col("enc"),
             lit(d2 + a + d3 + d2 + b + d3), lit(d2 + a + " " + b + d3)).as("enc"))
           // persist() materializes each round but keeps the full

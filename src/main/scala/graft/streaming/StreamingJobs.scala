@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ingest.Ingest
+import graft.model.Memo
 import graft.ops.Windows
 
 /** Structured-Streaming forms of the reference's jobs. The group-window
@@ -332,14 +333,6 @@ object StreamingJobs {
     screenAgainstStaticIndex(streamDocs, evalDocs, retention,
       streamIdCol = "train_id", staticIdCol = "eval_id")
 
-  /** Memoized distinct chunk-hash index per corpus frame (reference
-    * identity, like staticShMemo): the corpus is chunked and
-    * distinct-ed ONCE, then every micro-batch probes it. Cleared via
-    * [[graft.model.Caches]]. */
-  private val cdcIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, DataFrame]()
-  graft.model.Caches.register(() => cdcIdxMemo.clear())
-
   /** Streaming content-defined-chunk ingest — the online form of
     * `dedup_cdc_storage`'s economics: each arriving document is
     * chunked at its content-defined boundaries (a PURE map — the same
@@ -364,8 +357,10 @@ object StreamingJobs {
     * rows. */
   def cdcIngestStreaming(streamDocs: DataFrame, corpusDocs: DataFrame): DataFrame = {
     import graft.queries.PipelineQueries
-    val idx = cdcIdxMemo.computeIfAbsent(corpusDocs, cd =>
-      PipelineQueries.cdcChunks(cd)
+    // distinct chunk-hash index, memoized per corpus frame: the corpus
+    // is chunked and distinct-ed ONCE, then every micro-batch probes it
+    val idx = Memo(corpusDocs.sparkSession, "streaming", "cdcIdx", corpusDocs)(
+      PipelineQueries.cdcChunks(corpusDocs)
         .select(col("chunk_hash")).distinct()
         .withColumn("_stored", lit(1L))
         .persist())
@@ -393,13 +388,6 @@ object StreamingJobs {
     screenAgainstStaticIndex(streamDocs, corpusDocs, retention,
       streamIdCol = "new_id", staticIdCol = "matched_id")
 
-  /** Memoized frozen prefix-truncation corpus index per corpus frame
-    * (reference identity, like [[staticShMemo]]): the 32-char-block,
-    * anchor-capped member frame. Cleared via [[graft.model.Caches]]. */
-  private val prefixIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, DataFrame]()
-  graft.model.Caches.register(() => prefixIdxMemo.clear())
-
   /** Streaming prefix-truncation screen — the ingest-time form of
     * `dedup_prefix_truncation`: each arriving document is checked
     * against the PERSISTED 32-char-block index of the stored corpus
@@ -422,7 +410,9 @@ object StreamingJobs {
     * batch pair set. */
   def prefixTruncationStreaming(streamDocs: DataFrame, corpusDocs: DataFrame): DataFrame = {
     import graft.queries.DedupQueries
-    val idx = prefixIdxMemo.computeIfAbsent(corpusDocs, cd => cd
+    // frozen 32-char-block, anchor-capped member index, memoized per
+    // corpus frame
+    val idx = Memo(corpusDocs.sparkSession, "streaming", "prefixIdx", corpusDocs)(corpusDocs
       .filter(col("n_chars") >= 32)
       .select(col("doc_id").as("peer_id"), col("text").as("peer_text"),
         col("n_chars").cast("long").as("peer_chars"),
@@ -449,13 +439,6 @@ object StreamingJobs {
         least(col("n_chars"), col("peer_chars")).as("short_chars"),
         greatest(col("n_chars"), col("peer_chars")).as("long_chars"))
   }
-
-  /** Memoized distinct corpus L-gram-hash index per corpus frame
-    * (reference identity, like [[cdcIdxMemo]]). Cleared via
-    * [[graft.model.Caches]]. */
-  private val exsubIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, DataFrame]()
-  graft.model.Caches.register(() => exsubIdxMemo.clear())
 
   /** Streaming exact-substring screen — the ingest-time form of
     * `dedup_exact_substring` (the ExactSubstr shape): each arriving
@@ -494,8 +477,9 @@ object StreamingJobs {
       .select((Seq(col("doc_id"), col("o").cast("long").as("o"),
         md5(concat_ws(" ", slice(col("toks"), col("o"), lit(L)))).as("gh")) ++
         extra.map(col)): _*)
-    val idx = exsubIdxMemo.computeIfAbsent(corpusDocs, cd =>
-      occOf(cd, Nil).select(col("gh")).distinct().persist())
+    // distinct corpus L-gram-hash index, memoized per corpus frame
+    val idx = Memo(corpusDocs.sparkSession, "streaming", "exsubIdx", corpusDocs)(
+      occOf(corpusDocs, Nil).select(col("gh")).distinct().persist())
     // watermark BEFORE the semi-join: every arrival advances event
     // time even when none of its grams hit the corpus, so an all-novel
     // feed still flushes earlier arrivals' pending aggregations
@@ -515,13 +499,6 @@ object StreamingJobs {
       }
       .toDF("doc_id", "ts", "span_start", "span_end", "span_tokens")
   }
-
-  /** Memoized frozen SNM corpus index per corpus frame: the ranked
-    * (pass, skey) member frame plus its insertion-interval index.
-    * Cleared via [[graft.model.Caches]]. */
-  private val snmIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, (DataFrame, DataFrame)]()
-  graft.model.Caches.register(() => snmIdxMemo.clear())
 
   /** Streaming sorted-neighborhood screen — the ingest-time form of
     * `dedup_sorted_neighborhood`: each arriving document is compared
@@ -564,8 +541,10 @@ object StreamingJobs {
             col("n_chars")) ++ extra.map(col)): _*)
         }.reduce(_ unionByName _)
     }
-    val (members, intervals) = snmIdxMemo.computeIfAbsent(corpusDocs, cd => {
-      val m = keyedOf(cd, Nil)
+    // frozen SNM corpus index, memoized per corpus frame: the ranked
+    // (pass, skey) member frame plus its insertion-interval index
+    val (members, intervals) = Memo(corpusDocs.sparkSession, "streaming", "snmIdx", corpusDocs) {
+      val m = keyedOf(corpusDocs, Nil)
         .withColumn("rn", row_number().over(wBlock).cast("long"))
         .select(col("pass"), col("skey"), col("doc_id").as("peer_id"),
           col("n_chars").as("peer_chars"), col("rn"))
@@ -581,11 +560,8 @@ object StreamingJobs {
         lit(null).cast("long").as("lo_id"),
         col("peer_chars").as("hi_n"), col("peer_id").as("hi_id"))
       (m, iv.unionByName(sentinel).persist())
-    })
-    val corpusSh = staticShMemo.computeIfAbsent(corpusDocs, sd => sd
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), KernelExpressions.sortedNgramSet(col("toks"), 3).as("g"))
-      .persist())
+    }
+    val corpusSh = staticShingles(corpusDocs)
     val arrivals = keyedOf(streamDocs, Seq("ts", "text"))
       .withColumn("ga", KernelExpressions.sortedNgramSet(tokens(col("text")), 3))
       .drop("text")
@@ -615,6 +591,20 @@ object StreamingJobs {
       .dropDuplicatesWithinWatermark("doc_id", "peer_id")
   }
 
+  /** Shingled static side (doc_id, sorted 3-gram set g), memoized per
+    * corpus frame: two screens against the same static corpus — or a
+    * restarted query — reuse ONE persisted frame instead of pinning a
+    * duplicate per call and evicting the caches other query families
+    * rely on. */
+  private def staticShingles(staticDocs: DataFrame): DataFrame = {
+    import graft.functions.KernelExpressions
+    import graft.functions.TextFunctions.tokens
+    Memo(staticDocs.sparkSession, "streaming", "staticSh", staticDocs)(staticDocs
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), KernelExpressions.sortedNgramSet(col("toks"), 3).as("g"))
+      .persist())
+  }
+
   /** Shared core of [[decontaminateStreaming]] and
     * [[incrementalDedupStreaming]]: screen a document stream against a
     * STATIC corpus via its MinHash-LSH (band, bucket) index —
@@ -623,15 +613,6 @@ object StreamingJobs {
     * watermark-bounded dedup. The static index persists once
     * (anchor-capped per bucket — one witness decides the policy), so
     * micro-batches probe instead of re-shingling. */
-  /** Memoized shingled static side per corpus frame (reference
-    * identity, like annIdxMemo): two screens against the same static
-    * corpus — or a restarted query — reuse ONE persisted frame instead
-    * of pinning a duplicate per call and evicting the caches other
-    * query families rely on. Cleared via [[graft.model.Caches]]. */
-  private val staticShMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, DataFrame]()
-  graft.model.Caches.register(() => staticShMemo.clear())
-
   private def screenAgainstStaticIndex(
       streamDocs: DataFrame, staticDocs: DataFrame, retention: String,
       streamIdCol: String, staticIdCol: String): DataFrame = {
@@ -639,10 +620,7 @@ object StreamingJobs {
     import graft.functions.TextFunctions.tokens
     import graft.queries.DedupQueries
 
-    val evalSh = staticShMemo.computeIfAbsent(staticDocs, sd => sd
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), KernelExpressions.sortedNgramSet(col("toks"), 3).as("g"))
-      .persist())
+    val evalSh = staticShingles(staticDocs)
     // witness-side anchor cap on the static index, mirroring the batch
     // operator (DedupQueries.LshBucketCap): an arriving doc probes at
     // most cap eval witnesses per bucket — one is enough to flag it
@@ -1353,20 +1331,15 @@ object StreamingJobs {
     * StreamingDedupSpec applies the shared ranking and proves equality
     * with the batch operator's top-5.
     */
-  /** Memoized bucketed index per corpus frame (reference identity —
-    * DataFrame has no value equality): repeated [[annSearchStreaming]]
-    * calls against the same corpus reuse ONE persisted index instead
-    * of pinning a duplicate per call and evicting the caches other
-    * query families rely on. Cleared via [[graft.model.Caches]]. */
-  private val annIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, DataFrame]()
-  graft.model.Caches.register(() => annIdxMemo.clear())
-
   def annSearchStreaming(queryStream: DataFrame, corpus: DataFrame): DataFrame = {
     import graft.functions.KernelExpressions.dot
     import graft.queries.SimilarityQueries
     val planes = SimilarityQueries.hyperplanes(nPlanes = 8, dim = 64)
-    val idx = annIdxMemo.computeIfAbsent(corpus, c => c
+    // bucketed index, memoized per corpus frame: repeated calls against
+    // the same corpus reuse ONE persisted index instead of pinning a
+    // duplicate per call and evicting the caches other query families
+    // rely on
+    val idx = Memo(corpus.sparkSession, "streaming", "annIdx", corpus)(corpus
       .select(col("vec_id").as("neighbor_id"),
         transform(col("embedding"), x => x.cast("double")).as("vc"))
       .withColumn("nc", sqrt(dot(col("vc"), col("vc"))))
@@ -1385,21 +1358,6 @@ object StreamingJobs {
         round(SimilarityQueries.cosine(col("vq"), col("vc"), col("nq"), col("nc")), 6))
       .select("query_id", "neighbor_id", "cos", "ts")
   }
-
-  /** Memoized frozen SemDeDup assignment index per (session, corpus
-    * dir): the coarse-quantizer rows collected as plan literals (k₁ =
-    * ⌈√k⌉ = O(√n) rows — the SAME footprint class as the
-    * broadcast-hinted coarse frame of the batch assignment, sized in
-    * SCALING.md at ~30 MB for a 10¹¹-vector corpus; past 10¹² the
-    * batch path's own recursion trigger applies here identically),
-    * the per-cell centroid lists (k rows grouped to k₁ — joined, never
-    * collected), and the bucket-keyed assigned corpus (the memoized
-    * [[graft.queries.SimilarityQueries.semAssigned]] artifact).
-    * Cleared via [[graft.model.Caches]]. */
-  private val semIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String),
-      (Array[(Long, Seq[Double], Double)], DataFrame, DataFrame)]()
-  graft.model.Caches.register(() => semIdxMemo.clear())
 
   /** Streaming SemDeDup — the online form of `dedup_semantic`'s
     * within-cluster cosine screen, closing the continuous-crawl gap
@@ -1439,23 +1397,31 @@ object StreamingJobs {
     import graft.functions.KernelExpressions.dot
     import graft.queries.SimilarityQueries
     val s = streamVecs.sparkSession
-    val (coarseLits, cellCents, corpusIdx) = semIdxMemo.computeIfAbsent(
-      (System.identityHashCode(s), dir), _ => {
-        val (_, _, coarse, cellOfCent) = SimilarityQueries.semCentFrames(s, dir)
-        val lits = coarse.select(col("co_id"), col("co_v"), col("co_nrm"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-          .sortBy(_._1)
-        val cells = cellOfCent
-          .groupBy(col("cell"))
-          .agg(sort_array(collect_list(
-            struct(col("cent_id"), col("cv"), col("cnrm")))).as("cents"))
-          .persist()
-        val idx = SimilarityQueries.semAssigned(s, dir)
-          .select(col("bucket"), col("vec_id").as("matched_id"),
-            col("v").as("vc"), col("nrm").as("nc"))
-        (lits, cells, idx)
-      })
+    // frozen assignment index, memoized per (session, corpus dir): the
+    // coarse-quantizer rows collected as plan literals (k₁ = ⌈√k⌉ =
+    // O(√n) rows — the SAME footprint class as the broadcast-hinted
+    // coarse frame of the batch assignment, sized in SCALING.md at
+    // ~30 MB for a 10¹¹-vector corpus; past 10¹² the batch path's own
+    // recursion trigger applies here identically), the per-cell
+    // centroid lists (k rows grouped to k₁ — joined, never collected),
+    // and the bucket-keyed assigned corpus (the memoized
+    // SimilarityQueries.semAssigned artifact)
+    val (coarseLits, cellCents, corpusIdx) = Memo(s, "streaming", "semIdx", dir) {
+      val (_, _, coarse, cellOfCent) = SimilarityQueries.semCentFrames(s, dir)
+      val lits = coarse.select(col("co_id"), col("co_v"), col("co_nrm"))
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+        .sortBy(_._1)
+      val cells = cellOfCent
+        .groupBy(col("cell"))
+        .agg(sort_array(collect_list(
+          struct(col("cent_id"), col("cv"), col("cnrm")))).as("cents"))
+        .persist()
+      val idx = SimilarityQueries.semAssigned(s, dir)
+        .select(col("bucket"), col("vec_id").as("matched_id"),
+          col("v").as("vc"), col("nrm").as("nc"))
+      (lits, cells, idx)
+    }
     val coarseScored = array(coarseLits.map { case (id, cv, cn) =>
       struct((dot(col("v"), typedLit(cv)) / lit(cn)).as("cs"),
         lit(-id).as("negc"))
@@ -1477,16 +1443,6 @@ object StreamingJobs {
       .filter(col("cos") >= 0.4)
       .select("new_id", "matched_id", "cos", "ts")
   }
-
-  /** Memoized frozen fuzzy-match index per catalog frame (reference
-    * identity — same contract as [[annIdxMemo]]): the persisted
-    * (gram, cat_name) inverted-index DataFrame, the persisted ≤ 5-char
-    * short block keyed by length, and the gram → document-frequency
-    * map (alphabet²-bounded — the ONLY driver-side collect, sized by
-    * the character-bigram vocabulary, never by catalog rows). */
-  private val fuzzyIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, (DataFrame, DataFrame, Map[String, Long])]()
-  graft.model.Caches.register(() => fuzzyIdxMemo.clear())
 
   /** Online entity resolution: a stream of names matched against a
     * FROZEN catalog within Levenshtein distance ≤ 2 — the serving-time
@@ -1528,8 +1484,13 @@ object StreamingJobs {
   def fuzzyMatchStreaming(nameStream: DataFrame, catalog: DataFrame): DataFrame = {
     import graft.queries.RelationalQueries.gramsOf
     val spark = nameStream.sparkSession
-    val (gramIdx, shortIdx, gramDf) = fuzzyIdxMemo.computeIfAbsent(catalog, c => {
-      val names = c.select(col("name").as("cat_name")).distinct()
+    // frozen index, memoized per catalog frame: the persisted
+    // (gram, cat_name) inverted index, the persisted ≤ 5-char short
+    // block keyed by length, and the gram → document-frequency map
+    // (alphabet²-bounded — the ONLY driver-side collect, sized by the
+    // character-bigram vocabulary, never by catalog rows)
+    val (gramIdx, shortIdx, gramDf) = Memo(catalog.sparkSession, "streaming", "fuzzyIdx", catalog) {
+      val names = catalog.select(col("name").as("cat_name")).distinct()
       val gi = names
         .select(col("cat_name"), explode(gramsOf(col("cat_name"))).as("gram"))
         .persist()
@@ -1539,7 +1500,7 @@ object StreamingJobs {
       val df = gi.groupBy("gram").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       (gi, si, df)
-    })
+    }
     val bcDf = spark.sparkContext.broadcast(gramDf)
     // rarest-first prefix: the probe's ≤ 5 grams ordered by catalog df
     // (ties lexicographic) — the batch operator's (gdf, gr) order

@@ -54,10 +54,8 @@ object UpsertSink {
     def clear(table: String): Unit = tables.remove(table)
   }
 
-  /** `foreachBatch` body: executor-side, partition-parallel, batched
-    * upsert (threshold batching mirrors the reference's sink buffers —
-    * sink/SinkDataApiBatch.java:61 — though here a batch is just an
-    * amortization unit, not a correctness device).
+  /** `foreachBatch` body: executor-side, partition-parallel upsert
+    * into [[InMemoryStore]] (a later row with the same key wins).
     *
     * Usage:
     * {{{
@@ -66,17 +64,13 @@ object UpsertSink {
     *   .option("checkpointLocation", dir).start()
     * }}}
     */
-  def foreachBatchUpsert(table: String, keyCols: Seq[String], batchSize: Int = 100)(
+  def foreachBatchUpsert(table: String, keyCols: Seq[String])(
       df: DataFrame, epochId: Long): Unit = {
     val cols = df.columns.toSeq
     val keyIdx = keyCols.map(cols.indexOf)
     require(keyIdx.forall(_ >= 0), s"key columns $keyCols not all in $cols")
     df.foreachPartition { rows: Iterator[Row] =>
-      rows.grouped(batchSize).foreach { batch =>
-        batch.foreach { r =>
-          InMemoryStore.upsert(table, keyIdx.map(r.get), r.toSeq.map(identity))
-        }
-      }
+      rows.foreach(r => InMemoryStore.upsert(table, keyIdx.map(r.get), r.toSeq.map(identity)))
     }
   }
 
@@ -109,6 +103,9 @@ object UpsertSink {
     s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
   }
 
+  /** Rows per JDBC statement batch (one transaction each). */
+  private val JdbcBatchRows = 500
+
   /** The executing JDBC sink: `foreachBatch` body writing through
     * standard `addBatch`/`executeBatch` from `foreachPartition` — the
     * Spark form of the reference's batched Data-API sink
@@ -117,13 +114,15 @@ object UpsertSink {
     *
     *  - one connection per partition task, opened executor-side (the
     *    url string is the only thing serialized into the closure);
-    *  - per batch of `batchSize` rows: DELETE all keys, INSERT all
-    *    rows, then COMMIT — the delete+insert pair is atomic, so a
+    *  - per batch of `JdbcBatchRows` rows: DELETE all keys, INSERT
+    *    all rows, then COMMIT — the delete+insert pair is atomic, so a
     *    replayed epoch (same engine commit-log semantics as
     *    foreachBatchUpsert) rewrites identical rows instead of
     *    duplicating them: exactly-once to the table;
-    *  - rows within one micro-batch must have distinct keys (true for
-    *    any keyed aggregate output, which emits one row per key).
+    *  - rows sharing a key within one statement batch collapse to the
+    *    last one, which is what a row-by-row upsert leaves behind (the
+    *    sliding jobs emit one row per tied peer, all with the same
+    *    (key, ts) and the same count).
     *
     * Usage (Derby in-memory for tests; any JDBC url in production):
     * {{{
@@ -133,8 +132,7 @@ object UpsertSink {
     *   .option("checkpointLocation", dir).start()
     * }}}
     */
-  def jdbcForeachBatchUpsert(
-      url: String, table: String, keyCols: Seq[String], batchSize: Int = 500)(
+  def jdbcForeachBatchUpsert(url: String, table: String, keyCols: Seq[String])(
       df: DataFrame, epochId: Long): Unit = {
     val cols = df.columns.toSeq
     val keyIdx = keyCols.map(cols.indexOf)
@@ -149,8 +147,8 @@ object UpsertSink {
           val delSt: PreparedStatement = conn.prepareStatement(del)
           val insSt: PreparedStatement = conn.prepareStatement(ins)
           try {
-            rows.grouped(batchSize).foreach { batch =>
-              batch.foreach { r =>
+            rows.grouped(JdbcBatchRows).foreach { batch =>
+              batch.map(r => keyIdx.map(r.get) -> r).toMap.values.foreach { r =>
                 keyIdx.zipWithIndex.foreach { case (ki, p) => delSt.setObject(p + 1, r.get(ki)) }
                 delSt.addBatch()
                 cols.indices.foreach(i => insSt.setObject(i + 1, r.get(i)))

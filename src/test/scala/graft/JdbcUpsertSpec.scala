@@ -6,7 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.ingest.Ingest
 import graft.model.Tables
+import graft.sources.GeoJsonGen
 import graft.ops.Windows
 import graft.streaming.StreamingJobs._
 import graft.streaming.UpsertSink
@@ -25,18 +27,19 @@ class JdbcUpsertSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def withTable(name: String)(body: => Unit): Unit = {
+  private val windowColumns =
+    """k VARCHAR(64) NOT NULL,
+      |cnt BIGINT,
+      |window_start TIMESTAMP NOT NULL,
+      |window_end TIMESTAMP NOT NULL,
+      |PRIMARY KEY (k, window_start, window_end)""".stripMargin
+
+  private def withTable(name: String, columns: String = windowColumns)(body: => Unit): Unit = {
     val conn = DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
       try st.execute(s"DROP TABLE $name") catch { case _: java.sql.SQLException => () }
-      st.execute(
-        s"""CREATE TABLE $name (
-           |  k VARCHAR(64) NOT NULL,
-           |  cnt BIGINT,
-           |  window_start TIMESTAMP NOT NULL,
-           |  window_end TIMESTAMP NOT NULL,
-           |  PRIMARY KEY (k, window_start, window_end))""".stripMargin)
+      st.execute(s"CREATE TABLE $name ($columns)")
       st.close()
     } finally conn.close()
     body
@@ -120,6 +123,41 @@ class JdbcUpsertSpec extends SparkSpec {
       assert(tableRows("t_ckpt") == Set(
         ("a", 2L, ts("2024-01-01 00:00:00")),
         ("a", 1L, ts("2024-01-01 00:02:00"))))
+    }
+  }
+
+  test("sliding job over tied timestamps upserts one row per (key, ts) into Derby") {
+    // the sliding OVER job emits one row per tied peer, so two events of
+    // one class at one instant reach the sink as two rows with the same
+    // (key, ts) key and the same count
+    withTable("t_tied",
+        "k VARCHAR(64) NOT NULL, ts TIMESTAMP NOT NULL, trailing_cnt BIGINT, PRIMARY KEY (k, ts)") {
+      implicit val sql = spark.sqlContext
+      val feed = GeoJsonGen.features(seed = 3L, count = 3,
+        startEpochMs = Timestamp.valueOf("2024-01-01 00:00:00").getTime, stepMs = 1000L)
+      val lines = feed :+ feed.head // a second event of the same class at the same ts
+      val in = MemoryStream[String]
+      val q = StarterDemo.buildJob("StreamJobSqlSliding", in.toDF(), "30 seconds")
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: DataFrame, epochId: Long) =>
+          UpsertSink.jdbcForeachBatchUpsert(url, "t_tied", Seq("k", "ts"))(renamed(df), epochId)
+        }
+        .start()
+      try {
+        in.addData(lines: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+
+      val (cls, t0) = Ingest.parseGeoJson(Seq(feed.head).toDF("value"))
+        .as[(String, Timestamp)].head()
+      val conn = DriverManager.getConnection(url)
+      val rows = try {
+        val rs = conn.createStatement().executeQuery("SELECT k, ts, trailing_cnt FROM t_tied")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getString(1), r.getTimestamp(2), r.getLong(3))).toList
+      } finally conn.close()
+      assert(rows.size == 3, s"one row per distinct (key, ts): $rows")
+      assert(rows.contains((cls, t0, 2L)), s"tied peers count each other: $rows")
     }
   }
 
